@@ -102,7 +102,9 @@ case class IntersectCount(left: Expression, right: Expression)
       s"intersect_count expects (array<bigint>, array<bigint>) with " +
         s"non-null elements (the ShingleHashes contract; note duplicate " +
         s"probe-side elements each count), got " +
-        s"(${left.dataType.sql}, ${right.dataType.sql})")
+        s"(${left.dataType.sql}, ${right.dataType.sql}); remedy: wrap a " +
+        s"nullable-element input with array_compact(...), which drops nulls, or " +
+        s"cast a non-null-element array of another integer type to array<bigint>")
   override def dataType: DataType = LongType
   override def prettyName: String = "intersect_count"
 

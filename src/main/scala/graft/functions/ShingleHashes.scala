@@ -82,6 +82,12 @@ object ShingleHashesKernel {
   * (`array_distinct(transform(...))`) computes the same array but interprets
   * the lambda per shingle — measured 10× slower on the sf100 edge build
   * (SCALECHECK.md round 13); this kernel is one JIT-compiled method per row.
+  *
+  * Hashes, not strings: the Jaccard verify compares shingles only by equality,
+  * so a fixed 8-byte hash replaces the ~18-char string in every verify
+  * exchange. The tolerated error is a WITHIN-DOC 64-bit collision merging two
+  * of a doc's ~50 shingles (~2^-54 per corpus at sf1000); the DuckDB oracles
+  * compare the i/ca/cb counts, which hashing leaves identical absent one.
   */
 case class ShingleHashes(child: Expression) extends UnaryExpression {
   override def checkInputDataTypes(): TypeCheckResult =

@@ -1,5 +1,6 @@
 package graft.hpct
 
+import java.util.Locale
 import org.apache.spark.sql.DataFrame
 
 /** Dependency-free SVG rendering of [[Ops.flameGeometry]] frames — the engine-side
@@ -32,6 +33,11 @@ object FlameSvg {
     case c => c.toString
   }
 
+  // coordinates are written with a '.' decimal point whatever the JVM's default
+  // locale: a comma-decimal locale would make every numeric attribute invalid SVG
+  private def n2(d: Double): String = String.format(Locale.ROOT, "%.2f", Double.box(d))
+  private def n1(d: Double): String = String.format(Locale.ROOT, "%.1f", Double.box(d))
+
   /** Deterministic pastel fill per node id (stable across renders and engines). */
   private def fill(id: Long): String = s"hsl(${(id * 47) % 360},65%,62%)"
 
@@ -48,9 +54,14 @@ object FlameSvg {
   def render(geo: DataFrame, shape: String = "wheel", size: Int = 800,
       title: String = ""): String = {
     require(shape == "wheel" || shape == "rect", s"unknown shape $shape")
+    // a null value leaves its subtree without geometry (null x0/width), a NaN
+    // value its whole sibling group's (NaN): such a row draws nothing, as
+    // matplotlib draws nothing for a NaN bar, instead of writing NaN coordinates,
+    // which are not valid SVG
     val bars = geo.select("id", "depth", "x0", "width", "procedure", "labeled")
-      .collect().map(r => Bar(r.getLong(0), r.getInt(1), r.getDouble(2),
-        r.getDouble(3), if (r.isNullAt(4)) "" else r.getString(4), r.getBoolean(5)))
+      .collect().filter(r => Seq(2, 3).forall(i => !r.isNullAt(i) && !r.getDouble(i).isNaN))
+      .map(r => Bar(r.getLong(0), r.getInt(1), r.getDouble(2), r.getDouble(3),
+        if (r.isNullAt(4)) "" else r.getString(4), r.getBoolean(5)))
       .sortBy(b => (b.depth, b.x0))
     val sb = new StringBuilder
     sb ++= s"""<svg xmlns="http://www.w3.org/2000/svg" width="$size" height="$size" viewBox="0 0 $size $size">"""
@@ -75,9 +86,9 @@ object FlameSvg {
           val fs = math.max(8.0, rectUnit * 0.35)
           val (x, w) = (b.x0 / twoPi * size, b.width / twoPi * size)
           val y = size - (k + 1) * rectUnit // depth grows upward
-          sb ++= f"""<rect x="$x%.2f" y="$y%.2f" width="$w%.2f" height="$rectUnit%.2f" fill="${fill(b.id)}" stroke="white" stroke-width="1"><title>${esc(b.procedure)} (id ${b.id})</title></rect>""" + "\n"
+          sb ++= s"""<rect x="${n2(x)}" y="${n2(y)}" width="${n2(w)}" height="${n2(rectUnit)}" fill="${fill(b.id)}" stroke="white" stroke-width="1"><title>${esc(b.procedure)} (id ${b.id})</title></rect>""" + "\n"
           if (b.labeled)
-            sb ++= f"""<text x="${x + w / 2}%.2f" y="${y + rectUnit * 0.6}%.2f" text-anchor="middle" font-size="$fs%.1f">${esc(b.procedure)}</text>""" + "\n"
+            sb ++= s"""<text x="${n2(x + w / 2)}" y="${n2(y + rectUnit * 0.6)}" text-anchor="middle" font-size="${n1(fs)}">${esc(b.procedure)}</text>""" + "\n"
         } else {
           val fs = math.max(8.0, unit * 0.35)
           val c = size / 2.0
@@ -90,12 +101,12 @@ object FlameSvg {
           val ((x10, y10), (x11, y11)) = (px(r0, a1), px(r0, a0))
           val large = if (sweep > math.Pi) 1 else 0
           // counter-clockwise in math coords = sweep flag 0 in screen coords
-          sb ++= f"""<path d="M $x00%.2f $y00%.2f A $r1%.2f $r1%.2f 0 $large 0 $x01%.2f $y01%.2f L $x10%.2f $y10%.2f A $r0%.2f $r0%.2f 0 $large 1 $x11%.2f $y11%.2f Z" fill="${fill(b.id)}" stroke="white" stroke-width="1"><title>${esc(b.procedure)} (id ${b.id})</title></path>""" + "\n"
+          sb ++= s"""<path d="M ${n2(x00)} ${n2(y00)} A ${n2(r1)} ${n2(r1)} 0 $large 0 ${n2(x01)} ${n2(y01)} L ${n2(x10)} ${n2(y10)} A ${n2(r0)} ${n2(r0)} 0 $large 1 ${n2(x11)} ${n2(y11)} Z" fill="${fill(b.id)}" stroke="white" stroke-width="1"><title>${esc(b.procedure)} (id ${b.id})</title></path>""" + "\n"
           if (b.labeled) {
             val mid = b.x0 + b.width / 2
             val (tx, ty) = px(r0 + unit * 0.2 + fs / 2, mid)
             val rot = mid * 180 / math.Pi - 90
-            sb ++= f"""<text x="$tx%.2f" y="$ty%.2f" text-anchor="middle" font-size="$fs%.1f" transform="rotate(${-rot}%.1f $tx%.2f $ty%.2f)">${esc(b.procedure)}</text>""" + "\n"
+            sb ++= s"""<text x="${n2(tx)}" y="${n2(ty)}" text-anchor="middle" font-size="${n1(fs)}" transform="rotate(${n1(-rot)} ${n2(tx)} ${n2(ty)})">${esc(b.procedure)}</text>""" + "\n"
           }
         }
       }

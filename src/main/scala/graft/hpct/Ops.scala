@@ -8,7 +8,9 @@ import org.apache.spark.sql.functions._
   * reference's bespoke methods (SURVEY §2.A). Every operator returns a new
   * [[ProfileFrame]] carrying the same metadata (the reference's `_constructor`
   * behavior, HD.py:135-152); tree operations are relational operations on the
-  * materialized `callpath` array.
+  * materialized `callpath` array. The path filters, hot path and flame layout are
+  * each implemented once, in the column-parametrized tree-operator core at the
+  * end of this object, which the queries.Hierarchy tree queries share.
   */
 object Ops {
 
@@ -18,14 +20,7 @@ object Ops {
   def atPaths(pf: ProfileFrame, prefix: Seq[Long] = Nil, suffix: Seq[Long] = Nil,
       fragments: Seq[Seq[Long]] = Nil): ProfileFrame = {
     require(fragments.isEmpty, "filtering by arbitrary fragment not supported")
-    var df = pf.df
-    if (prefix.nonEmpty)
-      df = df.filter(size(col("callpath")) >= prefix.length &&
-        slice(col("callpath"), 1, prefix.length) === lit(prefix.toArray))
-    if (suffix.nonEmpty)
-      df = df.filter(size(col("callpath")) >= suffix.length &&
-        slice(col("callpath"), -suffix.length, suffix.length) === lit(suffix.toArray))
-    pf.copy(df = df)
+    pf.copy(df = pathFilter(pf.df, "callpath", prefix, suffix))
   }
 
   /** A pattern element for [[seqFilter]]: exact string equality or full-match regex
@@ -66,13 +61,8 @@ object Ops {
 
   /** Depth filter (`at_depths`/`at_depth`, reference HD.py:123-128, 395-401). */
   def atDepths(pf: ProfileFrame, minDepth: Option[Int] = None,
-      maxDepth: Option[Int] = None): ProfileFrame = {
-    val depth = size(col("callpath"))
-    var df = pf.df
-    minDepth.foreach(d => df = df.filter(depth >= d))
-    maxDepth.foreach(d => df = df.filter(depth <= d))
-    pf.copy(df = df)
-  }
+      maxDepth: Option[Int] = None): ProfileFrame =
+    pf.copy(df = depthFilter(pf.df, "callpath", minDepth, maxDepth))
 
   def atDepth(pf: ProfileFrame, depth: Int): ProfileFrame =
     atDepths(pf, Some(depth), Some(depth))
@@ -84,106 +74,101 @@ object Ops {
   def compact(pf: ProfileFrame): ProfileFrame =
     pf.copy(df = pf.df.select(pf.meta.compactColumns.map(col).toSeq: _*))
 
-  /** Hot path (reference HD.py:403-428): greedy argmax descent — from `callpath`,
-    * repeatedly take the children one level deeper and descend into the max-valued
-    * one until there are no children or the child's value drops below `threshold`
-    * (that child is excluded). Returns the rows whose callpath is on the hot path.
-    *
-    * All starts route through [[hotPathOneShot]] — one declarative plan instead of
-    * one argmax job per depth (the per-job overhead dominated the fixture-scale
-    * workload at ~25 tiny jobs per call, the only >2× like-for-like gap vs the
-    * reference). The two formulations are proven equal on both fixtures at two
-    * thresholds, root and prefix starts, by ParitySpec; [[hotPathIterative]] stays
-    * as the reference-shaped equivalence baseline.
+  /** Hot path (reference HD.py:403-428) of the profile from `callpath`, ranked by
+    * `baseColumn` (default: the meta's hot-path column). See [[hotPathRows]].
     */
   def hotPath(pf: ProfileFrame, callpath: Seq[Long] = Nil, threshold: Double = 0.05,
       baseColumn: Option[String] = None): ProfileFrame =
-    hotPathOneShot(pf, threshold, baseColumn, callpath)
+    pf.copy(df = hotPathRows(pf.df, "id", "callpath",
+      baseColumn.getOrElse(pf.meta.hotPathColumn), threshold, callpath))
 
-  /** The driver-loop hot path: one tiny argmax job per depth (bounded by tree depth
-    * <= 25 in the fixtures); each job is a filter + top-1 sort over a cached
-    * 2-column frame. Kept as the reference-shaped formulation (it also supports a
-    * non-root starting callpath) and as the equivalence baseline for
-    * [[hotPathOneShot]] in ParitySpec.
+  /** Flame-graph geometry (reference HD.py:430-540, minus matplotlib) of the
+    * subtree under `prefix`: one row per node per layer with `(id, depth, x0,
+    * width, procedure, labeled)`, layers `minDepth` (default: one below the
+    * prefix) to `maxDepth`, sized by `column` (default: the percentage column's
+    * ratio of parent). See [[flameLayout]].
     */
-  def hotPathIterative(pf: ProfileFrame, callpath: Seq[Long] = Nil, threshold: Double = 0.05,
-      baseColumn: Option[String] = None): ProfileFrame = {
-    val base = baseColumn.getOrElse(pf.meta.hotPathColumn)
-    require(pf.df.columns.contains(base), s"missing hot-path column $base")
-    val simple = pf.df.select(col(base).as("__v"), col("callpath"), col("id")).cache()
-    try {
-      var current = callpath
-      val hot = Seq.newBuilder[Seq[Long]]
-      var continue = true
-      while (continue) {
-        hot += current
-        val children = simple
-          .filter(size(col("callpath")) === current.length + 1 &&
-            (if (current.isEmpty) lit(true)
-             else slice(col("callpath"), 1, current.length) === lit(current.toArray)))
-          // pandas idxmax takes the first max in row (= id) order — same tie-break
-          .orderBy(desc("__v"), asc("id"))
-          .limit(1).select("callpath", "__v").collect()
-        if (children.isEmpty) continue = false
-        else {
-          val row = children.head
-          current = row.getSeq[Long](0)
-          if (row.isNullAt(1) || row.getDouble(1) < threshold) continue = false
-          // (also mirrors pandas: NaN < threshold is false => NaN child is descended)
-        }
-      }
-      val hotSet = hot.result()
-      val cond = hotSet.map(p =>
-        (col("callpath") === lit(p.toArray)).asInstanceOf[Column]).reduce(_ || _)
-      pf.copy(df = pf.df.filter(cond))
-    } finally simple.unpersist()
+  def flameGeometry(pf: ProfileFrame, prefix: Seq[Long] = Nil, column: Option[String] = None,
+      minDepth: Option[Int] = None, maxDepth: Option[Int] = None): DataFrame = {
+    val lo = minDepth.getOrElse(prefix.length + 1)
+    require(lo > prefix.length, s"minDepth $lo must exceed prefix length ${prefix.length}")
+    flameLayout(pathFilter(pf.df, "callpath", prefix), "id", "callpath",
+      column.getOrElse(pf.meta.percentageColumn + " ratio of parent"), lo, maxDepth,
+      passThrough = Seq("procedure"))
   }
 
-  /** One-shot hot path: the fully declarative formulation of [[hotPath]] — zero
-    * driver-side iteration, so it scales to any depth/width on a cluster.
+  // ---- Tree-operator core ----------------------------------------------------
+  // One implementation per tree operator, over any one-row-per-node table with an
+  // id column, a materialized root-to-node `path` array (the node's own key last;
+  // a root row, if any, has the empty path) and a value column. The ProfileFrame
+  // operators above call it with `id`/`callpath`/metric; queries.Hierarchy
+  // a11-a15 call it with `id`/`path`/`value`.
+
+  private def c(name: String): Column = col(s"`$name`")
+
+  /** Rows whose `path` starts with `prefix` and ends with `suffix` (empty = any). */
+  def pathFilter(df: DataFrame, path: String, prefix: Seq[Long] = Nil,
+      suffix: Seq[Long] = Nil): DataFrame = {
+    var out = df
+    if (prefix.nonEmpty)
+      out = out.filter(size(c(path)) >= prefix.length &&
+        slice(c(path), 1, prefix.length) === lit(prefix.toArray))
+    if (suffix.nonEmpty)
+      out = out.filter(size(c(path)) >= suffix.length &&
+        slice(c(path), -suffix.length, suffix.length) === lit(suffix.toArray))
+    out
+  }
+
+  /** Rows whose depth `size(path)` lies within the given bounds (None = open). */
+  def depthFilter(df: DataFrame, path: String, minDepth: Option[Int] = None,
+      maxDepth: Option[Int] = None): DataFrame = {
+    var out = df
+    minDepth.foreach(d => out = out.filter(size(c(path)) >= d))
+    maxDepth.foreach(d => out = out.filter(size(c(path)) <= d))
+    out
+  }
+
+  /** Greedy hot path: from the node at `start`, repeatedly step into the child with
+    * the max `value` (min `id` on ties — pandas idxmax order) until there are no
+    * children or that child's value is below `threshold` (it is excluded). Returns
+    * the rows on the path, all input columns kept.
     *
-    * A node is on the greedy hot path iff EVERY prefix of its callpath (itself
-    * included) strictly longer than the starting callpath is (a) the rank-1 child of
-    * its sibling group (max value, min id on ties — pandas idxmax order) and (b) at
-    * or above the threshold. That is exactly the set the greedy descent visits,
-    * minus the below-threshold final child it rejects. Three keyed stages: a
-    * per-parent rank window, a prefix explode (O(depth) per node), and a
-    * count-matches aggregation — no collect, no loop.
+    * One declarative plan, no per-depth jobs: a node is on the path iff
+    * EVERY prefix of its path (itself included) strictly longer than `start` is
+    * (a) the rank-1 child of its sibling group and (b) at or above the threshold —
+    * exactly the set the greedy descent visits, minus the below-threshold child it
+    * rejects. Three keyed stages: a per-parent rank window, a prefix explode
+    * (O(depth) rows per node) and a count-matches aggregation.
     *
-    * A non-empty `start` restricts the frame to the subtree rooted at that callpath
-    * (the node itself is on the path unconditionally, mirroring the greedy seed);
-    * sibling groups inside the subtree are complete, so the rank window is
-    * unchanged. NaN values descend (Spark orders NaN above every double — same
-    * outcome as the loop's `NaN < threshold == false`); null values stop.
+    * A non-empty `start` restricts the frame to the subtree rooted at that path
+    * (the node itself is on the path unconditionally, as the greedy seed); sibling
+    * groups inside the subtree are complete, so the rank window is unchanged. NaN
+    * values descend (Spark orders NaN above every double, and NaN >= threshold);
+    * null values stop. `Double.NegativeInfinity` descends to a leaf.
     */
-  def hotPathOneShot(pf: ProfileFrame, threshold: Double = 0.05,
-      baseColumn: Option[String] = None, start: Seq[Long] = Nil): ProfileFrame = {
-    val base = baseColumn.getOrElse(pf.meta.hotPathColumn)
-    require(pf.df.columns.contains(base), s"missing hot-path column $base")
+  def hotPathRows(df: DataFrame, id: String, path: String, value: String,
+      threshold: Double, start: Seq[Long] = Nil): DataFrame = {
+    require(df.columns.contains(value), s"missing hot-path column $value")
     val d0 = start.length
-    val sub =
-      if (start.isEmpty) pf.df
-      else pf.df.filter(size(col("callpath")) >= d0 &&
-        slice(col("callpath"), 1, d0) === lit(start.toArray))
+    val sub = pathFilter(df, path, prefix = start)
     val winners = sub
-      .filter(size(col("callpath")) > d0)
-      // greatest(..., 0): the size>0 filter already excludes the root at runtime,
+      .filter(size(c(path)) > d0)
+      // greatest(..., 0): the size > d0 filter already excludes the root at runtime,
       // but on literal/in-memory sources constant folding evaluates the slice
       // BEFORE the filter and a -1 length aborts the whole plan
       .withColumn("__parent",
-        slice(col("callpath"), lit(1), greatest(size(col("callpath")) - 1, lit(0))))
+        slice(c(path), lit(1), greatest(size(c(path)) - 1, lit(0))))
       .withColumn("__rk", row_number().over(
-        Window.partitionBy("__parent").orderBy(desc(s"`$base`"), asc("id"))))
-      .filter(col("__rk") === 1 && col(s"`$base`") >= threshold)
-      .select(col("callpath").as("__winner"))
+        Window.partitionBy("__parent").orderBy(c(value).desc, c(id).asc)))
+      .filter(col("__rk") === 1 && c(value) >= threshold)
+      .select(c(path).as("__winner"))
     val prefixes = sub
-      .select(col("id").as("__nid"), col("callpath"))
+      .select(c(id).as("__nid"), c(path))
       .withColumn("__k",
-        explode(when(size(col("callpath")) > d0,
-          sequence(lit(d0 + 1), size(col("callpath"))))
+        explode(when(size(c(path)) > d0, sequence(lit(d0 + 1), size(c(path))))
           .otherwise(array().cast("array<int>"))))
-      .select(col("__nid"), (size(col("callpath")) - d0).as("__depth"),
-        slice(col("callpath"), lit(1), col("__k")).as("__winner"))
+      .select(col("__nid"), (size(c(path)) - d0).as("__depth"),
+        slice(c(path), lit(1), col("__k")).as("__winner"))
     val hotIds = prefixes
       .join(winners, "__winner")
       .groupBy("__nid", "__depth")
@@ -191,155 +176,69 @@ object Ops {
       .filter(col("__hits") === col("__depth"))
       .select(col("__nid"))
     // the start node (zero prefixes beyond d0) is always on the path — the greedy
-    // descent seeds there; for a root start that is the empty-callpath root row
-    pf.copy(df = sub.join(hotIds, sub("id") === hotIds("__nid"), "left_semi")
-      .unionByName(sub.filter(size(col("callpath")) === d0)))
+    // descent seeds there; for a root start that is the empty-path root row, if any
+    sub.join(hotIds, sub(s"`$id`") === hotIds("__nid"), "left_semi")
+      .unionByName(sub.filter(size(c(path)) === d0))
   }
 
-  /** Flame-graph geometry (reference HD.py:430-540, minus matplotlib): one row per
-    * node per layer with `(id, depth, x0, width, procedure, labeled)`. First layer is
-    * normalized to 2π; each deeper layer is sibling-normalized within its parent and
-    * offset by the within-parent cumulative sum plus the parent's offset.
+  /** Flame layout of the layers `lo`..`hi` (depth = `size(path)`): one row per
+    * node with `(id, depth, x0, width, <passThrough>..., labeled)`. Layer `lo` is
+    * normalized to the full circle 2π; each deeper layer is sibling-normalized
+    * within its parent and offset by the within-parent cumulative sum (in id
+    * order) plus the parent's offset. `labeled` is the reference's label rule
+    * width ≥ π/(depth − lo + 32).
     *
-    * Delegates to [[flameGeometryOneShot]] — ONE declarative plan, no per-layer
-    * driver jobs; the layer-join formulation is kept as
-    * [[flameGeometryIterative]] (the reference-shaped equivalence baseline,
-    * proven equal on both fixtures by ParitySpec).
-    */
-  def flameGeometry(pf: ProfileFrame, prefix: Seq[Long] = Nil, column: Option[String] = None,
-      minDepth: Option[Int] = None, maxDepth: Option[Int] = None): DataFrame =
-    flameGeometryOneShot(pf, prefix, column, minDepth, maxDepth)
-
-  /** One-shot flame geometry: the fully declarative formulation — zero driver-side
-    * iteration (the loop version runs one windowed job per tree level, ~25
-    * localCheckpoint'ed jobs on the fixtures, and its per-job overhead dominates).
-    *
-    * Derivation: let r(p) = v(p) / Σ_{siblings of p} v be a node's share of its
-    * normalization group (the FULL first layer for depth `lo`, its parent's
-    * children below), and b(p) the within-group fraction strictly before p in id
+    * One declarative plan, no per-layer jobs. Let r(p) = v(p) / Σ v over
+    * p's normalization group (the WHOLE layer `lo` for depth `lo`, its parent's
+    * children below), and b(p) the within-group share strictly before p in id
     * order. Unrolling the layer recursion width = r·parentWidth,
     * x0 = parentX0 + b·parentWidth gives, for a node n at depth d:
     *   width(n) = 2π · Π_{k=lo..d} r(prefix_k(n))
     *   x0(n)    = 2π · Σ_{k=lo..d} b(prefix_k(n)) · Π_{j=lo..k-1} r(prefix_j(n))
-    * Three keyed stages, mirroring [[hotPathOneShot]]'s playbook: a per-group
-    * window computing (r, b) once per NODE, a prefix explode (O(depth) rows per
-    * node), and one ordered `aggregate` per node folding its ancestor chain —
-    * no collect, no loop, no per-layer jobs; scales to any depth/width.
+    * Three keyed stages, as in [[hotPathRows]]: a per-group window computing
+    * (r, b) once per node, a prefix explode (O(depth) rows per node), and one
+    * ordered `aggregate` per node folding its ancestor chain.
     */
-  def flameGeometryOneShot(pf: ProfileFrame, prefix: Seq[Long] = Nil,
-      column: Option[String] = None, minDepth: Option[Int] = None,
-      maxDepth: Option[Int] = None): DataFrame = {
-    val colName = column.getOrElse(pf.meta.percentageColumn + " ratio of parent")
-    val lo = minDepth.getOrElse(prefix.length + 1)
-    require(lo > prefix.length, s"minDepth $lo must exceed prefix length ${prefix.length}")
+  def flameLayout(df: DataFrame, id: String, path: String, value: String, lo: Int,
+      hi: Option[Int] = None, passThrough: Seq[String] = Nil): DataFrame = {
     val twoPi = 2.0 * math.Pi
-    var base = atPaths(pf, prefix = prefix).df
-      .filter(size(col("callpath")) >= lo)
-      .select(col("id"), col("callpath"), col(colName).as("__v"), col("procedure"))
-    maxDepth.foreach(hi => base = base.filter(size(col("callpath")) <= hi))
+    val keep = passThrough.map(c)
+    val base = depthFilter(df, path, Some(lo), hi)
+      .select(Seq(c(id), c(path), c(value).as("__v")) ++ keep: _*)
     // normalization group key: depth-lo nodes form ONE global group (the full
-    // circle — the loop's partitionBy(id*0)); deeper nodes group under their parent
+    // circle); deeper nodes group under their parent
     val keyed = base.withColumn("__g",
-      when(size(col("callpath")) === lo, array(lit(-1L)))
+      when(size(c(path)) === lo, array(lit(-1L)))
         // greatest(..., 0) keeps constant folding from evaluating a -1 length on
         // literal sources (the size >= lo filter excludes those rows at runtime)
-        .otherwise(slice(col("callpath"), lit(1), greatest(size(col("callpath")) - 1, lit(0)))))
+        .otherwise(slice(c(path), lit(1), greatest(size(c(path)) - 1, lit(0)))))
     val wG = Window.partitionBy("__g")
-    val rb = keyed.select(col("callpath").as("__pfx"),
+    val rb = keyed.select(c(path).as("__pfx"),
       (col("__v") / sum("__v").over(wG)).as("__r"),
-      (coalesce(sum("__v").over(wG.orderBy("id")
+      (coalesce(sum("__v").over(wG.orderBy(c(id))
         .rowsBetween(Window.unboundedPreceding, -1)), lit(0.0))
         / sum("__v").over(wG)).as("__b"))
     val prefixes = base
-      .select(col("id"), col("callpath"), col("procedure"),
-        size(col("callpath")).as("__d"))
+      .select(Seq(c(id), c(path)) ++ keep :+ size(c(path)).as("__d"): _*)
       .withColumn("__k", explode(sequence(lit(lo), col("__d"))))
-      .select(col("id"), col("__d"), col("procedure"),
-        col("__k"), slice(col("callpath"), lit(1), col("__k")).as("__pfx"))
-    // ordered ancestor fold: width = prod of r top-down, x0 = sum of b·(prefix prod)
+      .select(Seq(c(id), col("__d")) ++ keep ++
+        Seq(col("__k"), slice(c(path), lit(1), col("__k")).as("__pfx")): _*)
+    // ordered ancestor fold: width = prod of r top-down, x0 = sum of b·(prefix prod).
+    // The accumulator's fields must be nullable: a null value makes its node's
+    // width and its whole subtree's geometry null (as in the layer loop); with
+    // the literal zero's non-null fields the nulls read back as 0.0.
     val acc = prefixes.join(rb, "__pfx")
-      .groupBy("id", "__d", "procedure")
+      .groupBy(Seq(c(id), col("__d")) ++ keep: _*)
       .agg(aggregate(
         array_sort(collect_list(struct(col("__k"), col("__r"), col("__b")))),
-        struct(lit(1.0).as("p"), lit(0.0).as("x")),
+        struct(lit(1.0).as("p"), lit(0.0).as("x")).cast("struct<p:double,x:double>"),
         (a, e) => struct(
           (a.getField("p") * e.getField("__r")).as("p"),
           (a.getField("x") + e.getField("__b") * a.getField("p")).as("x"))).as("__a"))
-    acc.select(col("id"), col("__d").cast("int").as("depth"),
-      (col("__a.x") * twoPi).as("x0"),
-      (col("__a.p") * twoPi).as("width"),
-      col("procedure"),
-      (col("__a.p") * twoPi >= lit(math.Pi) / (col("__d") - lo + 32)).as("labeled"))
+    acc.select(Seq(c(id), col("__d").cast("int").as("depth"),
+        (col("__a.x") * twoPi).as("x0"), (col("__a.p") * twoPi).as("width")) ++ keep :+
+      (col("__a.p") * twoPi >= lit(math.Pi) / (col("__d") - lo + 32)).as("labeled"): _*)
   }
-
-  /** The layer-join flame geometry: a driver loop over depth layers (bounded by
-    * tree depth); each layer is one windowed plan plus a join against the previous
-    * layer's geometry. Kept as the reference-shaped equivalence baseline for
-    * [[flameGeometryOneShot]] in ParitySpec.
-    */
-  def flameGeometryIterative(pf: ProfileFrame, prefix: Seq[Long] = Nil, column: Option[String] = None,
-      minDepth: Option[Int] = None, maxDepth: Option[Int] = None): DataFrame = {
-    val colName = column.getOrElse(pf.meta.percentageColumn + " ratio of parent")
-    val lo = minDepth.getOrElse(prefix.length + 1)
-    require(lo > prefix.length, s"minDepth $lo must exceed prefix length ${prefix.length}")
-    val twoPi = 2.0 * math.Pi
-    val base = atPaths(pf, prefix = prefix).df
-      .select(col("id"), col("callpath"), col(colName).as("__v"), col("procedure"))
-      .cache()
-    // ONE bounded action up front (the max tree depth, <= 25 in the fixtures) instead
-    // of a per-layer isEmpty job; the loop then only BUILDS plans. Callpath prefix
-    // closure guarantees no empty layer below the max depth.
-    val maxRow = base.agg(max(size(col("callpath")))).head()
-    if (maxRow.isNullAt(0)) { base.unpersist(); return pf.df.sparkSession.emptyDataFrame }
-    val hi = math.min(maxRow.getInt(0), maxDepth.getOrElse(Int.MaxValue))
-    var depth = lo
-    var prev: DataFrame = null // (pid, pw, po)
-    var out: DataFrame = null
-    try while (depth <= hi) {
-      val layerBase = base.filter(size(col("callpath")) === depth)
-      val layer =
-        if (prev == null) {
-          // depth-lo siblings form ONE normalization group by construction (the full
-          // circle), so the single-partition window is the semantics, not a bottleneck
-          // — its input is one tree level, not the dataset. The key is id*0, not a
-          // literal: EliminateWindowPartitions folds literals away and the resulting
-          // unpartitioned WindowExec WARN would drown real regressions in the logs.
-          val w = Window.partitionBy(col("id") * 0)
-          layerBase.select(col("id"), col("procedure"),
-            (col("__v") / sum("__v").over(w) * twoPi).as("width"),
-            (coalesce(sum("__v").over(w.orderBy("id")
-              .rowsBetween(Window.unboundedPreceding, -1)), lit(0.0))
-              / sum("__v").over(w) * twoPi).as("x0"))
-        } else {
-          val byParent = Window.partitionBy("__parent")
-          layerBase
-            .withColumn("__parent", element_at(col("callpath"), -2))
-            .join(prev, col("__parent") === col("pid"))
-            .select(col("id"), col("procedure"),
-              (col("__v") / sum("__v").over(byParent) * col("pw")).as("width"),
-              (col("po") + coalesce(sum("__v").over(byParent.orderBy("id")
-                .rowsBetween(Window.unboundedPreceding, -1)), lit(0.0))
-                / sum("__v").over(byParent) * col("pw")).as("x0"))
-        }
-      // each layer is locally checkpointed: it feeds both the result union and the
-      // next layer's parent join, and the checkpoint TRUNCATES the logical plan, so
-      // layer d's plan doesn't nest layers lo..d-1 (a lazy 25-deep nested plan makes
-      // the optimizer itself the bottleneck — observed >> 10 min on the fixtures).
-      // One shallow job per layer, bounded by tree depth; on a real cluster swap for
-      // reliable checkpoint() if executor loss matters mid-computation.
-      val geo = layer.select(col("id"), lit(depth).as("depth"), col("x0"), col("width"),
-        col("procedure"),
-        (col("width") >= lit(math.Pi / (depth - lo + 32))).as("labeled"))
-        .localCheckpoint()
-      out = if (out == null) geo else out.unionByName(geo)
-      prev = geo.select(col("id").as("pid"), col("width").as("pw"), col("x0").as("po"))
-      depth += 1
-    // every layer is localCheckpoint'ed (materialized), so the cached base is safe
-    // to drop here — without this the cache leaked once per call (round-3 ADVICE)
-    } finally base.unpersist()
-    if (out == null) pf.df.sparkSession.emptyDataFrame else out
-  }
-
   /** Multi-profile merge (SURVEY B17): metric columns differ per file, so align by
     * name and fill the gaps with nulls.
     */

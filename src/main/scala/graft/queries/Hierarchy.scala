@@ -1,8 +1,8 @@
 package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.hpct.Ops
 
 /** Tree-as-table queries over a synthetic hierarchy derived from the star schema
   * (region -> nation -> customer), mirroring the reference's decisive modeling choice:
@@ -11,6 +11,12 @@ import org.apache.spark.sql.functions._
   * operation on arrays. These are the oracle-checkable analogs of SURVEY §2.A
   * A8 (ratio-of-total), A9 (ratio-of-parent), A11 (`at_paths`), A12 (`at_depths`),
   * A14 (`hot_path`), A15 (flame geometry) and §2.B B14 (path self-join).
+  *
+  * A11, A12, A14 and A15 run the hpct tree-operator core ([[graft.hpct.Ops]]'s
+  * `pathFilter`, `depthFilter`, `hotPathRows`, `flameLayout`) — the same code that
+  * serves [[graft.hpct.ProfileFrame]] — over `id`/`path`/`value`, and keep only
+  * their own projection, rounding and ordering. A8, A9 and B14 keep their own
+  * ratio and self-join code.
   *
   * Node ids are offset per level so they're globally unique:
   * region = r_regionkey + 10, nation = n_nationkey + 100, customer = c_custkey + 1000.
@@ -145,92 +151,37 @@ object Hierarchy {
     // A11: callpath prefix filter (`at_paths`, reference HD.py:391-393) — keep rows
     // whose path starts with [10] (region 0's node).
     "a11_at_paths" -> ((s, d) =>
-      nodesCached(s, d)
-        .filter(slice(col("path"), 1, 1) === array(lit(10L)))
+      Ops.pathFilter(nodesCached(s, d), "path", prefix = Seq(10L))
         .select(col("id"), pathStr.as("path_str"), col("value"))
         .orderBy("id")),
 
     // A12: depth filter (`at_depths`, reference HD.py:395-401).
     "a12_at_depths" -> ((s, d) =>
-      nodesCached(s, d)
-        .filter(size(col("path")).between(2, 3))
+      Ops.depthFilter(nodesCached(s, d), "path", Some(2), Some(3))
         .select(col("id"), size(col("path")).cast("long").as("depth"))
         .orderBy("id")),
 
-    // A14: hot path — greedy argmax descent (reference HD.py:403-428) as ONE
-    // declarative plan, the hierarchy-side port of hpct.Ops.hotPathOneShot's
-    // rank-window + prefix-explode + count-matches shape (proven equal to the
-    // per-depth argmax loop by ParitySpec on the hpct frames): a node is on the
-    // hot path iff EVERY prefix of its path (itself included) is the rank-1 child
-    // of its sibling group (max value, min id on ties). Zero driver iteration —
-    // no per-depth collect jobs — so the same plan handles depth 25 as depth 3.
-    "a14_hot_path" -> ((s, d) => {
-      // the query's contract descends the 3-level hierarchy (region → nation →
-      // customer), matching the oracle's three greedy CTE levels — the depth cap
-      // the old driver loop carried implicitly. A no-op on this frame (max depth
-      // IS 3) but pinned explicitly so a deeper nodes frame can't silently
-      // diverge from the 3-level oracle; the uncapped formulation is
-      // hpct.Ops.hotPathOneShot.
-      val n = nodesCached(s, d).filter(size(col("path")) <= 3) // shared cache — NOT unpersisted here
-      // rank-1 nodes per sibling group (depth-1 nodes all share the empty parent)
-      val winners = n
-        .withColumn("__parent",
-          slice(col("path"), lit(1), greatest(size(col("path")) - 1, lit(0))))
-        .withColumn("__rk", row_number().over(
-          Window.partitionBy("__parent").orderBy(desc("value"), asc("id"))))
-        .filter(col("__rk") === 1)
-        .select(col("path").as("__winner"))
-      // every node × its path prefixes (O(depth) rows per node)
-      val prefixes = n
-        .select(col("id").as("__nid"), col("path"))
-        .withColumn("__k", explode(sequence(lit(1), size(col("path")))))
-        .select(col("__nid"), size(col("path")).as("__depth"),
-          slice(col("path"), lit(1), col("__k")).as("__winner"))
-      // on the hot path iff ALL prefixes are winners
-      val hotIds = prefixes.join(winners, "__winner")
-        .groupBy("__nid", "__depth").agg(count(lit(1)).as("__hits"))
-        .filter(col("__hits") === col("__depth"))
-        .select(col("__nid").as("id"))
-      n.join(hotIds, Seq("id"), "left_semi")
+    // A14: hot path — the greedy argmax descent (reference HD.py:403-428), max
+    // value first, min id on ties. The path cap pins the oracle's three greedy
+    // levels (region → nation → customer): a no-op on this frame, whose max depth
+    // IS 3, but a deeper nodes frame cannot silently diverge from the 3-level
+    // oracle. The oracle has no threshold, so neither does the descent: -∞ admits
+    // every non-null value.
+    "a14_hot_path" -> ((s, d) =>
+      Ops.hotPathRows(Ops.depthFilter(nodesCached(s, d), "path", maxDepth = Some(3)),
+          "id", "path", "value", threshold = Double.NegativeInfinity)
         .select(col("id"), pathStr.as("path_str"), col("value"),
           size(col("path")).cast("long").as("depth"))
-        .orderBy("depth")
-    }),
+        .orderBy("depth")),
 
-    // A15: flame-graph geometry (reference HD.py:430-540): first layer normalized to
-    // 2π; deeper layers sibling-normalized within parent and offset by within-parent
-    // cumulative sum + parent offset. Two window passes + one broadcast join.
-    "a15_flame" -> ((s, d) => {
-      val n = nodesCached(s, d)
-      val twoPi = lit(2.0 * math.Pi)
-      // constant-but-non-foldable partition key: Spark 4's EliminateWindowPartitions
-      // folds a literal key away, leaving an unpartitioned WindowExec whose WARN
-      // drowns real regressions. The input is one tree layer (5 region rows), so the
-      // single partition IS the semantics — this just keeps the spec non-empty.
-      val wAll = Window.partitionBy(col("id") * 0)
-      val l1 = n.filter(size(col("path")) === 1).select(
-        col("id"),
-        (twoPi * col("value") / sum("value").over(wAll)).as("w"),
-        (twoPi * coalesce(
-          sum("value").over(wAll.orderBy("id").rowsBetween(Window.unboundedPreceding, -1)),
-          lit(0.0)) / sum("value").over(wAll)).as("o"))
-      val byParent = Window.partitionBy(col("pk"))
-      val l2base = n.filter(size(col("path")) === 2).select(
-        col("id"), col("value"), element_at(col("path"), 1).as("pk"))
-      val l2 = l2base
-        .join(broadcast(l1.select(col("id").as("pk"), col("w").as("pw"), col("o").as("po"))), "pk")
-        .select(
-          col("id"),
-          (col("pw") * col("value") / sum("value").over(byParent)).as("w"),
-          (col("po") + coalesce(
-            sum("value").over(byParent.orderBy("id").rowsBetween(Window.unboundedPreceding, -1)),
-            lit(0.0)) * col("pw") / sum("value").over(byParent)).as("o"))
-      l1.select(col("id"), lit(1L).as("depth"), round(col("w"), 6).as("width"),
-          round(col("o"), 6).as("x0"))
-        .unionByName(l2.select(col("id"), lit(2L).as("depth"), round(col("w"), 6).as("width"),
-          round(col("o"), 6).as("x0")))
-        .orderBy("depth", "id")
-    }),
+    // A15: flame-graph geometry (reference HD.py:430-540) of the top two layers:
+    // regions share the full 2π circle, each nation its region's arc in
+    // proportion to value, offsets in id order.
+    "a15_flame" -> ((s, d) =>
+      Ops.flameLayout(nodesCached(s, d), "id", "path", "value", lo = 1, hi = Some(2))
+        .select(col("id"), col("depth").cast("long").as("depth"),
+          round(col("width"), 6).as("width"), round(col("x0"), 6).as("x0"))
+        .orderBy("depth", "id")),
   )
 
   val oracles: Map[String, String] = Map(

@@ -1,8 +1,11 @@
 package graft.queries
 
-/** Strict parsing for the operator A/B env knobs
+/** Strict parsing for the operator env knobs: [[bool]] for the A/B switches
   * (`SPARK_GRAFT_RETIRE_PAIRS`, `SPARK_GRAFT_D11_CACHE`,
-  * `SPARK_GRAFT_VERIFY_ARRAYS`).
+  * `SPARK_GRAFT_D09_STAGED`, `SPARK_GRAFT_E06_WINDOW_STAGE1`,
+  * `SPARK_GRAFT_VEC_BANDS_CACHE`, `SPARK_GRAFT_PREFLIGHT`,
+  * `SPARK_GRAFT_REP_DRAIN`), [[int]] for the sizes (`SPARK_GRAFT_BUCKET_CAP`,
+  * `SPARK_GRAFT_BUCKET_STATE_CAP`, `SPARK_GRAFT_SIMHASH_BITS`).
   *
   * Only the literal strings "0" and "1" are meaningful; anything else
   * (an accidental "true", "yes", or empty export) warns once per knob name

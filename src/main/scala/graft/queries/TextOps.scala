@@ -60,20 +60,6 @@ object TextOps {
     bandsCache.getOrElseUpdate((s, d), bands(s, d).cache())
   }
 
-  /** The Jaccard verify compares shingles only by EQUALITY, never by content,
-    * so the verify path carries xxhash64(shingle) instead of the ~18-char
-    * string: the distinct and both intersection-join exchanges shrink ~2.5×
-    * (fixed 16-byte rows), which is what let the fifth-decade verify fit this
-    * box's scratch disk (round 10 — the string form ran out of shuffle space
-    * at 50M docs). The tolerated error is a WITHIN-DOC 64-bit collision
-    * merging two of a doc's ~50 shingles (~2^-54 per corpus at sf1000, zero in
-    * practice); bands/minhash still consume the true strings, and the DuckDB
-    * oracles compare the i/ca/cb COUNTS, which hashing leaves bit-identical
-    * absent a collision.
-    */
-  private def hashedShingles(df: DataFrame): DataFrame =
-    df.select(col("doc_id"), xxhash64(col("shingle")).as("shingle"))
-
   /** Size the session's shuffle for a shingle-width exchange BEFORE building
     * any frame that explodes per-token rows ([[Sizing.autoSizeShingleExchange]]:
     * documents footprint × the measured intermediate-to-input ratio). Called
@@ -224,15 +210,6 @@ object TextOps {
     * takes over — the right plan once the "benchmark suite" is corpus-sized.
     */
   private val BroadcastEvalMaxDocBytes: Long = 256L << 20
-
-  /** word 3-gram shingles: (doc_id, shingle), one row per position. */
-  private def shinglesOf(docs: DataFrame): DataFrame =
-    docs
-      .select(col("doc_id"), split(col("text"), " ").as("tk"))
-      .select(col("doc_id"), col("tk"),
-        explode(when(size(col("tk")) >= 3, sequence(lit(1), size(col("tk")) - 2))
-          .otherwise(array().cast("array<int>"))).as("i"))
-      .select(col("doc_id"), concat_ws(" ", slice(col("tk"), col("i"), lit(3))).as("shingle"))
 
   /** MinHash signature banded for LSH: (doc_id, band, sig); k=8 hashes, 4 bands of 2.
     * h_j(doc) = min over shingles of md5(j || '|' || shingle); band sig = md5 of the
@@ -584,55 +561,36 @@ object TextOps {
     *    verify. Same rows by construction: the kernel emits the same
     *    xxhash64 values the old distinct keyed on, and a zero-shingle doc
     *    contributes an empty array (i = 0, filtered) instead of no count
-    *    row. JaccardGateSpec pins all forms (exploded baseline / cached
-    *    arrays / restricted arrays / legacy) row-for-row.
-    *
-    * `SPARK_GRAFT_VERIFY_ARRAYS=0` forces the legacy distinct+groupBy form
-    * (operator A/B knob, same human-outranks-heuristic contract as
-    * SPARK_GRAFT_RETIRE_PAIRS).
+    *    row. JaccardGateSpec pins both array forms row-for-row against the
+    *    exploded baseline.
     */
   private[graft] def jaccardCountsRestricted(s: SparkSession, d: String,
-      cand0: DataFrame): DataFrame =
-    if (Knobs.bool("SPARK_GRAFT_VERIFY_ARRAYS").contains(false))
-      jaccardCountsRestrictedLegacy(s, d, cand0)
-    else {
-      // r20: rule 2 taken one step further — the per-doc arrays no longer
-      // explode at all. The candidate-doc slice keeps its kernel-built
-      // distinct-shingle ARRAY on the doc row, and the verify is the same
-      // two-join zero-aggregation plan as the cached branch
-      // ([[jaccardCountsFromArrays]]); the explode, the shingle-level
-      // intersection exchange, and the groupBy(id_a, id_b) spill source are
-      // all gone. Rule 1 (restrict the DOCUMENT frame before shingling)
-      // stands unchanged via [[restrictedDocs]].
-      graft.functions.ShingleHashes.register(s)
-      val cand = cand0.localCheckpoint()
-      // checkpoint the candidate-doc ARRAY frame too (r20): both pair-join
-      // sides read it, and without the pin each side re-runs the whole
-      // documents scan + candidate-id aggregation + semi-join + shingle
-      // kernel (the sf100 after-plan showed the subtree twice). The frame is
-      // small — candidate docs only, one ~50-long array per doc (~0.4 KB/doc;
-      // ~16% of docs at sf100) — the exact shape the r9 cand checkpoint
-      // precedent pins as worth materializing once.
-      val docs = restrictedDocs(s, d, cand)
-        .select(col("doc_id"), expr("shingle_hashes(text)").as("__sh"))
-        .localCheckpoint()
-      jaccardCountsFromArrays(cand, docs)
-    }
-
-  /** Pre-round-13 restricted form: global distinct + groupBy count over the
-    * exploded rows. Kept reachable (knob above) as the A/B baseline and for
-    * the three-way gate spec; the array form replaces its two
-    * candidate-corpus × shingle-scale exchanges with scan-local expressions.
-    */
-  private[graft] def jaccardCountsRestrictedLegacy(s: SparkSession, d: String,
       cand0: DataFrame): DataFrame = {
+    // r20: rule 2 taken one step further — the per-doc arrays no longer
+    // explode at all. The candidate-doc slice keeps its kernel-built
+    // distinct-shingle ARRAY on the doc row, and the verify is the same
+    // two-join zero-aggregation plan as the cached branch
+    // ([[jaccardCountsFromArrays]]); the explode, the shingle-level
+    // intersection exchange, and the groupBy(id_a, id_b) spill source are
+    // all gone. Rule 1 (restrict the DOCUMENT frame before shingling)
+    // stands unchanged via [[restrictedDocs]].
+    graft.functions.ShingleHashes.register(s)
     val cand = cand0.localCheckpoint()
-    val vsh = hashedShingles(shinglesOf(restrictedDocs(s, d, cand))).distinct()
-    jaccardCountsFrom(cand, vsh)
+    // checkpoint the candidate-doc ARRAY frame too (r20): both pair-join
+    // sides read it, and without the pin each side re-runs the whole
+    // documents scan + candidate-id aggregation + semi-join + shingle
+    // kernel (the sf100 after-plan showed the subtree twice). The frame is
+    // small — candidate docs only, one ~50-long array per doc (~0.4 KB/doc;
+    // ~16% of docs at sf100) — the exact shape the r9 cand checkpoint
+    // precedent pins as worth materializing once.
+    val docs = restrictedDocs(s, d, cand)
+      .select(col("doc_id"), expr("shingle_hashes(text)").as("__sh"))
+      .localCheckpoint()
+    jaccardCountsFromArrays(cand, docs)
   }
 
   /** The candidate-doc slice of the documents table: semi-join on the ids of
-    * the (checkpointed) candidate pairs. Both restricted forms share it.
+    * the (checkpointed) candidate pairs.
     */
   private def restrictedDocs(s: SparkSession, d: String, cand: DataFrame): DataFrame = {
     val ids = cand.select(col("id_a").as("doc_id"))
@@ -642,7 +600,7 @@ object TextOps {
 
   /** Test hook: the pre-r20 exploded-join verify over a freshly built
     * distinct-shingle frame — the ground-truth baseline the equivalence spec
-    * compares both array forms (and legacy) against. Uncached on purpose: the
+    * compares both array forms against. Uncached on purpose: the
     * spec wants the OLD plan shape (shingle-level intersection join +
     * groupBy(id_a, id_b) count), not the old cache.
     */
@@ -1403,7 +1361,7 @@ object TextOps {
         .orderBy("doc_id")),
   )
 
-  /** Shared DuckDB CTEs mirroring [[shinglesOf]]/[[bandsOf]]/[[candidatePairsFromBands]],
+  /** Shared DuckDB CTEs mirroring the word 3-gram shingles/[[bandsOf]]/[[candidatePairsFromBands]],
     * parameterized on the source relation so d10 can run them over its
     * quality-gated deduped survivors instead of the full documents table.
     */

@@ -58,6 +58,12 @@ class IntersectCountSpec extends AnyFunSuite {
         .collect()
     }
     assert(e.getMessage.contains("non-null elements"))
+    // the error names its remedy, and the remedy analyzes and counts
+    assert(e.getMessage.contains("array_compact("), e.getMessage)
+    val fixed = Seq(("x")).toDF("t")
+      .select(expr("intersect_count(array_compact(array(1L, null, 2L)), array(2L, 3L))"))
+      .head()
+    assert(fixed.getLong(0) === 1L)
   }
 
   test("property: agreement on random distinct long arrays") {

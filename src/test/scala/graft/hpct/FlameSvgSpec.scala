@@ -54,6 +54,25 @@ class FlameSvgSpec extends AnyFunSuite {
     assert(!svg.contains("NaN") && !svg.contains("Infinity"))
   }
 
+  test("numbers keep a '.' decimal point under a comma-decimal default locale") {
+    val saved = java.util.Locale.getDefault
+    java.util.Locale.setDefault(java.util.Locale.GERMANY)
+    try {
+      for (shape <- Seq("wheel", "rect")) {
+        val svg = FlameSvg.render(geo, shape = shape, size = 400, title = "exp1")
+        val attrs = """ (x|y|width|height|font-size)="([^"]*)"""".r
+          .findAllMatchIn(svg).map(_.group(2)).toSeq
+        val pathArgs = """ d="([^"]*)"""".r.findAllMatchIn(svg)
+          .flatMap(_.group(1).split(" ")).filterNot(_.matches("[MALZ]")).toSeq
+        val rotateArgs = """rotate\(([^)]*)\)""".r.findAllMatchIn(svg)
+          .flatMap(_.group(1).split(" ")).toSeq
+        assert(attrs.exists(_.contains(".")), s"$shape: no fractional attribute to check")
+        for (v <- attrs ++ pathArgs ++ rotateArgs)
+          assert(v.toDoubleOption.isDefined, s"$shape: '$v' is not a number")
+      }
+    } finally java.util.Locale.setDefault(saved)
+  }
+
   test("renders the real fixture geometry end to end") {
     val fixture = "/root/reference/test/data/experiment1.xml"
     assume(new java.io.File(fixture).exists())

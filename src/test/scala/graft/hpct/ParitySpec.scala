@@ -121,9 +121,9 @@ class ParitySpec extends AnyFunSuite {
   test("one-shot hot path equals the driver-loop hot path (both fixtures, two thresholds)") {
     assume(hasFixtures)
     for (pf <- Seq(pf1, pf2); th <- Seq(0.05, 0.01)) {
-      val loop = Ops.hotPathIterative(pf, threshold = th).df
+      val loop = TreeReference.hotPathIterative(pf, threshold = th).df
         .select("id").collect().map(_.getLong(0)).sorted
-      val oneShot = Ops.hotPathOneShot(pf, threshold = th).df
+      val oneShot = Ops.hotPath(pf, threshold = th).df
         .select("id").collect().map(_.getLong(0)).sorted
       assert(oneShot === loop, s"${pf.meta.dbPath} th=$th")
     }
@@ -133,13 +133,13 @@ class ParitySpec extends AnyFunSuite {
     assume(hasFixtures)
     for (pf <- Seq(pf1, pf2)) {
       // restart from a mid-path node: the 3rd node of the root-start hot path
-      val start = Ops.hotPathIterative(pf).df
+      val start = TreeReference.hotPathIterative(pf).df
         .filter(size(col("callpath")) === 2)
         .select("callpath").head().getSeq[Long](0).toSeq
       for (th <- Seq(0.05, 0.01)) {
-        val loop = Ops.hotPathIterative(pf, callpath = start, threshold = th).df
+        val loop = TreeReference.hotPathIterative(pf, callpath = start, threshold = th).df
           .select("id").collect().map(_.getLong(0)).sorted
-        val oneShot = Ops.hotPathOneShot(pf, threshold = th, start = start).df
+        val oneShot = Ops.hotPath(pf, callpath = start, threshold = th).df
           .select("id").collect().map(_.getLong(0)).sorted
         assert(oneShot === loop, s"${pf.meta.dbPath} start=$start th=$th")
       }
@@ -224,8 +224,8 @@ class ParitySpec extends AnyFunSuite {
         .map(r => (r.getLong(0), r.getInt(1)) ->
           (r.getDouble(2), r.getDouble(3), r.getBoolean(4)))
         .toMap
-      val loop = canon(Ops.flameGeometryIterative(pf))
-      val oneShot = canon(Ops.flameGeometryOneShot(pf))
+      val loop = canon(TreeReference.flameGeometryIterative(pf))
+      val oneShot = canon(Ops.flameGeometry(pf))
       assert(oneShot.keySet === loop.keySet, s"$key: node/layer set differs")
       oneShot.foreach { case (k, (x, w, l)) =>
         val (lx, lw, ll) = loop(k)
@@ -235,8 +235,8 @@ class ParitySpec extends AnyFunSuite {
       }
       // spot-check a restricted window too (prefix + depth bounds hit both the
       // global-group and per-parent normalization paths)
-      val loopW = canon(Ops.flameGeometryIterative(pf, minDepth = Some(3), maxDepth = Some(6)))
-      val oneW = canon(Ops.flameGeometryOneShot(pf, minDepth = Some(3), maxDepth = Some(6)))
+      val loopW = canon(TreeReference.flameGeometryIterative(pf, minDepth = Some(3), maxDepth = Some(6)))
+      val oneW = canon(Ops.flameGeometry(pf, minDepth = Some(3), maxDepth = Some(6)))
       assert(oneW.keySet === loopW.keySet, s"$key: bounded node/layer set differs")
       oneW.foreach { case (k, (x, w, _)) =>
         val (lx, lw, _) = loopW(k)

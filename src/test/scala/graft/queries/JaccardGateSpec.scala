@@ -23,8 +23,7 @@ class JaccardGateSpec extends AnyFunSuite {
         "cast(ca as long) as ca", "cast(cb as long) as cb")
       .collect().map(_.toString).toSeq
 
-  test("array verifies (cached AND restricted) and legacy == exploded baseline, " +
-      "row for row (sf0.001 and sf0.01)") {
+  test("array verifies (cached, restricted) == exploded baseline") {
     val s = spark
     for (dir <- Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01")) {
       val cand = TextOps.candidatePairs(s, dir)
@@ -34,12 +33,8 @@ class JaccardGateSpec extends AnyFunSuite {
       val cachedArrays = rows(TextOps.jaccardCountsFromCachedForTest(s, dir, cand))
       // the shipped above-gate branch: array join over the candidate-doc slice
       val restricted = rows(TextOps.jaccardCountsRestricted(s, dir, cand))
-      // the pre-round-13 form: global distinct + groupBy count — the A/B
-      // baseline SPARK_GRAFT_VERIFY_ARRAYS=0 routes to
-      val legacy = rows(TextOps.jaccardCountsRestrictedLegacy(s, dir, cand))
       assert(cachedArrays === exploded, s"cached-array branch disagrees with exploded on $dir")
       assert(restricted === exploded, s"restricted-array branch disagrees with exploded on $dir")
-      assert(legacy === exploded, s"legacy branch disagrees with exploded on $dir")
       assert(exploded.nonEmpty, s"vacuous compare on $dir — no candidate pairs")
     }
   }
